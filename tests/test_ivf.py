@@ -99,3 +99,32 @@ def test_semantic_near_dup_multiprobe_recovers_boundary_pairs(spark, sf_med):
         emb, threshold=0.4, n_probes=2, centroids=cents
     ).count()
     assert two >= one  # probes only ever add candidate cells
+
+
+def test_semantic_near_dup_string_ids_with_empty_shards(spark, monkeypatch):
+    """String ids through the block-split kernel: a (cell, shard) group with
+    no A-side rows must return an empty frame typed like the string ids."""
+    from uk_housing_dashboard_etl_spark.operators import similarity
+    from uk_housing_dashboard_etl_spark.operators.ivf import semantic_near_dup
+
+    # force the split on a tiny corpus: nsplit >= 4 shards per cell, so
+    # 6 vectors over 2 cells leave at least 2 of the 8 groups without A rows
+    monkeypatch.setattr(similarity, "BLOCK_SPLIT_MIN_BYTES", 0)
+    rng = np.random.default_rng(0)
+    rows = [(i, [float(x) for x in rng.normal(size=4)]) for i in range(6)]
+    num = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = kmeans_fit(num, k=2, iterations=2)
+    # zero-padded, so string order matches numeric order (id_a < id_b)
+    txt = num.select(
+        F.format_string("v%02d", "vec_id").alias("vec_id"), "embedding"
+    )
+    got = semantic_near_dup(
+        txt, threshold=-1.0, k=2, n_probes=1, centroids=cents
+    ).collect()
+    want = semantic_near_dup(
+        num, threshold=-1.0, k=2, n_probes=1, centroids=cents
+    ).collect()
+    assert want
+    assert sorted((r.id_a, r.id_b, r.cosine) for r in got) == sorted(
+        (f"v{r.id_a:02d}", f"v{r.id_b:02d}", r.cosine) for r in want
+    )

@@ -422,3 +422,47 @@ def test_pq_adc_dense_table_built_once_outside_query_projection(spark):
             assert "__cents" not in ln and "__cbs" not in ln, q
             # each slot evaluates exactly one subspace-distance fold
             assert ln.count("zip_with") == 1, q
+
+
+def _outside_cache(plan: str) -> str:
+    """The lines of a plan tree string that are not inside a cached
+    layer: each ``InMemoryRelation`` node is kept, the plan it caches
+    (printed indented below it) is dropped."""
+    kept, cache_depth = [], None
+    for ln in plan.splitlines():
+        depth = len(ln) - len(ln.lstrip(" :+-"))
+        if cache_depth is not None and depth > cache_depth:
+            continue
+        cache_depth = depth if "InMemoryRelation" in ln else None
+        kept.append(ln)
+    return "\n".join(kept)
+
+
+def test_pipeline_window_consumers_read_cached_windows(spark):
+    """The pipeline's anomalies and latest outputs read the rolling
+    windows from the cache: no second rolling Window, fan-out Generate
+    or densify join over the grid in their own plans."""
+    from uk_housing_dashboard_etl_spark.plans import HousingPipeline, PipelineConfig
+
+    raw = spark.createDataFrame(
+        [
+            ("t1", "100000", "2024-01-01", "AA1 1AA", "D"),
+            ("t2", "200000", "2024-01-09", "BB2 2BB", "S"),
+            ("t3", "300000", "2024-01-20", "AA1 1AA", "T"),
+        ],
+        "transaction_unique_id string, price string, date_of_transfer string,"
+        " postcode string, property_type string",
+    )
+    lookup = spark.createDataFrame(
+        [("AA11AA", "Alpha"), ("BB22BB", "Beta")], "key string, local_authority string"
+    )
+    out = HousingPipeline(spark, raw, lookup, PipelineConfig(windows=[2])).run()
+    for name in ("anomalies", "latest"):
+        plan = out[name]._jdf.queryExecution().optimizedPlan().toString()
+        outer = _outside_cache(plan)
+        cached = [ln for ln in outer.splitlines() if "InMemoryRelation" in ln]
+        assert cached and all("window_weeks" in ln for ln in cached), outer
+        # the rolling frame (ROWS n PRECEDING .. CURRENT ROW) and the
+        # per-window Generate exist only inside the cached layer
+        assert "currentrow$()" not in outer and "Generate" not in outer, outer
+        assert "explode(sequence" not in outer, outer

@@ -4,10 +4,12 @@ from __future__ import annotations
 
 import glob
 import os
+import time
 
 import pytest
 
 from uk_housing_dashboard_etl_spark.plans import HousingPipeline, PipelineConfig
+from uk_housing_dashboard_etl_spark.plans.pipeline import OUTPUTS
 from uk_housing_dashboard_etl_spark.sources.readers import (
     read_csv_sniffed,
     read_lookup_csv,
@@ -51,7 +53,7 @@ def test_lookup_schema_validation(spark, tmp_path):
         read_lookup_csv(spark, str(bad))
 
 
-def test_full_pipeline_end_to_end(spark, tmp_path):
+def _pipeline(spark, tmp_path, artifacts_dir):
     p = tmp_path / "ppd.csv"
     p.write_text("\n".join(r.format(d=",") for r in PPD_ROWS))
     raw = read_csv_sniffed(spark, str(p), require_price_and_date=True)
@@ -65,21 +67,71 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     lookup = lookup_raw.select(
         normalize_code(F.col("postcode")).alias("key"), "local_authority"
     )
-    arts = str(tmp_path / "artifacts")
-    pipe = HousingPipeline(
-        spark, raw, lookup, PipelineConfig(windows=[2], artifacts_dir=arts)
+    return HousingPipeline(
+        spark, raw, lookup, PipelineConfig(windows=[2], artifacts_dir=artifacts_dir)
     )
-    outputs = pipe.run()
+
+
+def test_full_pipeline_end_to_end(spark, tmp_path):
+    arts = str(tmp_path / "artifacts")
+    outputs = _pipeline(spark, tmp_path, arts).run()
+    assert tuple(outputs) == OUTPUTS
     weekly = outputs["weekly_by_la"].toPandas()
     assert set(weekly["local_authority"]) == {"Alpha", "Beta"}
     # bad date dropped, bad price nulled but row kept
     assert weekly["transactions"].sum() == 2
     qa = outputs["qa"].collect()[0]
     assert qa["rows_raw"] == 3 and qa["las"] == 2
-    # S6 artifacts on disk, one folder per mart, with headers
-    for name in ["weekly_by_la", "windows", "anomalies", "latest", "qa"]:
-        files = glob.glob(os.path.join(arts, name, "*.csv"))
-        assert files, f"missing artifact {name}"
+    # S6 artifacts on disk: one folder per mart, each a single header CSV,
+    # also when the writes run concurrently
+    for name in OUTPUTS:
+        files = glob.glob(os.path.join(arts, name, "part-*.csv"))
+        assert len(files) == 1, f"artifact {name}: {files}"
+        with open(files[0]) as fh:
+            header = fh.readline().rstrip("\n")
+        assert header == ",".join(outputs[name].columns), name
+
+
+def test_pipeline_artifact_failure_is_best_effort(spark, tmp_path, monkeypatch, caplog):
+    from uk_housing_dashboard_etl_spark.plans import pipeline
+
+    real = pipeline.write_csv_artifact
+
+    def flaky(df, path):
+        if os.path.basename(path) == "anomalies":
+            raise OSError("disk full")
+        real(df, path)
+
+    monkeypatch.setattr(pipeline, "write_csv_artifact", flaky)
+    arts = str(tmp_path / "artifacts")
+    outputs = _pipeline(spark, tmp_path, arts).run()
+    assert tuple(outputs) == OUTPUTS
+    for name in OUTPUTS:
+        files = glob.glob(os.path.join(arts, name, "part-*.csv"))
+        assert len(files) == (0 if name == "anomalies" else 1), name
+    failures = [
+        r for r in caplog.records if r.getMessage() == "artifact write failed: anomalies"
+    ]
+    assert len(failures) == 1 and failures[0].exc_info is not None
+
+
+def test_pipeline_sink_jobs_keep_callers_job_group(spark, tmp_path):
+    sc = spark.sparkContext
+    group = "pipeline-sinks-job-group"
+    sc.setJobGroup(group, "artifact writes")
+    try:
+        _pipeline(spark, tmp_path, str(tmp_path / "artifacts")).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job starts reach the status store through the asynchronous listener bus
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        if len(jobs) >= len(OUTPUTS) or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    assert len(jobs) >= len(OUTPUTS), jobs
 
 
 def test_serialize_for_sheet_nulls_and_strings(spark):

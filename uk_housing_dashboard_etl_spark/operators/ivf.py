@@ -236,6 +236,7 @@ def semantic_near_dup(
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_type
 
     if centroids is None:
         centroids = kmeans_fit(
@@ -272,6 +273,8 @@ def semantic_near_dup(
         (f.name, f.dataType.simpleString()) for f in index.schema.fields
     )["cell"]
     schema = f"cell {cell_type}, id_a {id_type}, id_b {id_type}, cosine double"
+    # an empty shard's id columns must carry the same type as the schema
+    id_dtype = to_arrow_type(index.schema["vec_id"].dataType).to_pandas_dtype()
 
     # block-parallel split (r15): more slots than cells ⇒ shard each
     # cell's A-side deterministically and replicate the cell's member
@@ -301,7 +304,7 @@ def semantic_near_dup(
     def _empty() -> pd.DataFrame:
         return pd.DataFrame(
             {"cell": [], "id_a": [], "id_b": [], "cosine": []}
-        ).astype({"id_a": "int64", "id_b": "int64", "cosine": "float64"})
+        ).astype({"id_a": id_dtype, "id_b": id_dtype, "cosine": "float64"})
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         if "__a" in pdf.columns:

@@ -7,7 +7,11 @@ NaN→"" all-string for Sheets (ref ``etl/etl_main.py:292``), and loads one
 frame to BigQuery (ref ``etl/etl_main.py:304-316``).
 
 Scale notes: marts are small (weeks × LAs), so a single-file CSV via
-``coalesce(1)`` is fine. Raw/fact data at 100 TB would instead go to a
+``coalesce(1)`` is fine. ``HousingPipeline.run`` calls
+``write_csv_artifact`` for its seven marts concurrently, from a thread
+pool: each call is its own job writing its own directory, so the writes
+overlap without sharing output files and each artifact stays one
+``part-*.csv``. Raw/fact data at 100 TB would instead go to a
 partitioned parquet zone — ``write_partitioned_parquet`` is that path.
 """
 
